@@ -1150,7 +1150,7 @@ def q_kll_warehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from sketches_go_spark.core.kll import KLLSketch
-    from sketches_go_spark.functions.sketch_fns import two_phase_merge
+    from sketches_go_spark.functions.sketch_fns import merge_rows, two_phase_merge
     from sketches_go_spark.sources.io import read_sketches, write_sketches
 
     t = transcripts_from_events(spark, sf_dir).where(F.col("tool").isNotNull())
@@ -1160,7 +1160,7 @@ def q_kll_warehouse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     write_sketches(fine, path, partition_by=["role"])
     merged = two_phase_merge(
-        read_sketches(spark, path), ["role"], KLLSketch.from_bytes
+        read_sketches(spark, path), ["role"], merge_rows(KLLSketch.from_bytes)
     )
     out = sk.with_sketch_quantiles(merged, KLLSketch.from_bytes, list(QS))
     est_long = out.select(

@@ -20,7 +20,14 @@ assembled from the tiny bins relation; fastest at low/medium cardinality).
 Needed for bounded-memory collapsing semantics, sketch-as-a-column
 storage/rollup, streaming state and checkpointed resume.  The blob is the
 reference-compatible binary format (core.encoding), so shuffle/checkpoint
-bytes stay small.
+bytes stay small.  Every per-group loop here runs on the codec's columnar
+batch kernels: partial and bins-assembly sketches are built and encoded a
+whole batch at a time (``encode_sketches``), and the merge decodes each
+Arrow batch of blobs at once (``decode_sketches``) and merges its key runs
+with one sort and grouped sum (``merge_sketch_runs``) inside the shared
+``sketch_fns.two_phase_merge`` stage.  The scalar ``encode_sketch`` /
+``decode_sketch`` serve the extraction UDFs (``with_quantiles``,
+``with_summary``, ``sketch_to_bins``), streaming state and proto conversion.
 
 Both paths share the mapping math and agree on bucket semantics; parity is
 asserted in tests (same quantile estimates vs the same oracle).
@@ -56,8 +63,16 @@ from sketches_go_spark.core.ddsketch import (
     DDSketch,
     DDSketchConfig,
 )
-from sketches_go_spark.core.encoding import decode_sketch, encode_sketch
+from sketches_go_spark.core.encoding import (
+    concat_sketch_columns,
+    decode_sketch,
+    decode_sketches,
+    encode_sketches,
+    merge_sketch_runs,
+    sketch_columns,
+)
 from sketches_go_spark.functions.expressions import bucket_value, sign_bucket
+from sketches_go_spark.functions.sketch_fns import key_runs, two_phase_merge
 
 DEFAULT_QUANTILES = (0.5, 0.95, 0.99)
 
@@ -297,9 +312,9 @@ def ddsketch_partial(
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # fully vectorized: per Arrow batch, compute (sign, bucket) arrays
         # once, reduce to per-(group, sign, bucket) bins with a C-path pandas
-        # groupby, and only materialize python DDSketch objects ONCE per
-        # group at partition end — no per-group work inside the batch loop,
-        # so high-cardinality keys (conv_id) cost the same per row as one key
+        # groupby, and encode every group's sketch in ONE columnar pass at
+        # partition end — no per-group Python work at all, so
+        # high-cardinality keys (conv_id) cost the same per row as one key
         bin_parts: list[pd.DataFrame] = []
         stat_parts: list[pd.DataFrame] = []
         for pdf in batches:
@@ -371,39 +386,20 @@ def ddsketch_partial(
             .sum()
             .reset_index()
         )
+        # sorted by key like the bins, so row g of the stats is run g
         stats = (
             pd.concat(stat_parts, ignore_index=True)
-            .groupby(kcols, sort=False, dropna=False)
+            .groupby(kcols, sort=True, dropna=False)
             .agg(cnt=("cnt", "sum"), s=("s", "sum"), mn=("mn", "min"), mx=("mx", "max"))
         )
-        # dict lookups instead of per-group .loc (O(1), matters at 10^5 groups)
-        # keys normalized via _norm_key: pandas emits distinct NaN objects for
-        # null group keys, and NaN-keyed dict lookups miss (nan != nan)
-        stats_d = {
-            _norm_key(idx if isinstance(idx, tuple) else (idx,)): (r.cnt, r.s, r.mn, r.mx)
-            for idx, r in zip(stats.index, stats.itertuples(index=False))
-        }
-        rows = []
-        for gkey, sub in bins.groupby(kcols, sort=False, dropna=False):
-            gtuple = gkey if isinstance(gkey, tuple) else (gkey,)
-            sk = DDSketch(config=config)
-            sgn = sub["sign"].to_numpy()
-            bkt = sub["bucket"].to_numpy(dtype=np.int64)
-            cnt = sub["w"].to_numpy(dtype=np.float64)
-            p = sgn == 1
-            n = sgn == -1
-            # bins arrive sorted by (sign, bucket) asc -> both stores ascending
-            sk.pos_idx, sk.pos_cnt = bkt[p], cnt[p]
-            sk.neg_idx, sk.neg_cnt = bkt[n], cnt[n]
-            sk.zero_count = float(cnt[sgn == 0].sum())
-            sk._apply_collapse()
-            st = stats_d[_norm_key(gtuple)]
-            sk.exact_count = float(st[0])
-            sk.exact_sum = float(st[1])
-            sk.exact_min = float(st[2])
-            sk.exact_max = float(st[3])
-            rows.append((*gtuple, encode_sketch(sk)))
-        yield pd.DataFrame(rows, columns=list(keys) + ["sketch"])
+        starts = key_runs(bins, kcols)
+        out = bins[kcols].iloc[starts].reset_index(drop=True)
+        out["sketch"] = _sketches_from_bins(
+            bins["sign"].to_numpy(), bins["bucket"].to_numpy(dtype=np.int64),
+            bins["w"].to_numpy(dtype=np.float64), starts, config,
+            *(stats[c].to_numpy(dtype=np.float64) for c in ("cnt", "s", "mn", "mx")),
+        )
+        yield out
 
     if metrics is not None:
         from sketches_go_spark.plans.metrics import instrument_map_in_pandas
@@ -412,14 +408,46 @@ def ddsketch_partial(
     return df.select(*cols).mapInPandas(build, schema=out_schema)
 
 
-def _norm_key(vals) -> tuple:
-    """Run-comparison key: NaN (which never equals itself) normalized to None
-    so a null-keyed group merges into ONE run instead of one row per partial
-    (nulls/NaNs sort together in sortWithinPartitions, so runs ARE contiguous
-    — only the equality check needs the normalization)."""
-    return tuple(
-        None if (isinstance(v, float) and v != v) else v for v in vals
+def _sketches_from_bins(
+    sign: np.ndarray,
+    bucket: np.ndarray,
+    count: np.ndarray,
+    starts: np.ndarray,
+    config: DDSketchConfig,
+    xcount: np.ndarray,
+    xsum: np.ndarray,
+    xmin: np.ndarray,
+    xmax: np.ndarray,
+) -> np.ndarray:
+    """One encoded sketch per run of bins rows ``[starts[g], starts[g+1])``,
+    each run ordered by (sign, bucket) with unique buckets per sign; the
+    exact stats are given per run."""
+    n = starts.size
+    run = np.repeat(np.arange(n), np.diff(np.append(starts, sign.size)))
+    zero = sign == 0
+    store = 2 * run[~zero] + (sign[~zero] < 0)
+    order = np.argsort(store, kind="stable")  # positive store before negative
+    cols = sketch_columns(
+        store[order], bucket[~zero][order], count[~zero][order], n, config,
+        np.bincount(run[zero], weights=count[zero], minlength=n),
+        xcount, xsum, xmin, xmax,
     )
+    return encode_sketches(cols)
+
+
+def _merge_blob_runs(config: DDSketchConfig):
+    """:func:`two_phase_merge` kernel: decode the batch's blobs at once and
+    merge each key run with one grouped sum (core.encoding batch kernels)."""
+
+    def merge_runs(pdf: pd.DataFrame, starts: np.ndarray, carry):
+        cols = decode_sketches(pdf["sketch"], config=config)
+        if carry is not None:
+            cols = concat_sketch_columns([carry, cols])
+            starts = np.concatenate([[0], starts[1:] + 1])
+        merged = merge_sketch_runs(cols, starts, config)
+        return encode_sketches(merged), merged.take(np.array([merged.n - 1]))
+
+    return merge_runs
 
 
 def ddsketch_merge(
@@ -429,49 +457,14 @@ def ddsketch_merge(
     metrics=None,
 ) -> DataFrame:
     """Phase 2: shuffle the (tiny) partials by group key and merge
-    (MergeWith semantics, ddsketch.go:302-310).
-
-    Implemented as repartition-by-key + sortWithinPartitions + a streaming
-    mapInPandas pass — NOT applyInPandas, whose per-group invocation costs
-    ~1 ms and dominates at high key cardinality (500k conv_ids would pay
-    ~8 min of pure invocation overhead; the streaming merge pays one python
-    decode per partial row instead)."""
+    (MergeWith semantics, ddsketch.go:302-310) in the shared streaming
+    merge stage, one Arrow batch at a time: per batch, one columnar decode
+    of every blob, one sort and grouped sum of the bins of every key run,
+    and one columnar encode of the merged sketches."""
     config = config or DDSketchConfig()
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
-    kcols = list(keys)
-
-    def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key: tuple | None = None
-        cur: DDSketch | None = None
-        out_rows: list[tuple] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            for i, blob in enumerate(pdf["sketch"]):
-                k = _norm_key(a[i] for a in key_arrays)
-                if k != cur_key:
-                    if cur is not None:
-                        out_rows.append((*cur_key, encode_sketch(cur)))
-                    cur_key = k
-                    cur = decode_sketch(bytes(blob), config=config)
-                else:
-                    cur.merge(decode_sketch(bytes(blob), config=config))
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
-                out_rows = []
-        if cur is not None:
-            out_rows.append((*cur_key, encode_sketch(cur)))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
-
-    if metrics is not None:
-        from sketches_go_spark.plans.metrics import instrument_map_in_pandas
-
-        merge_stream = instrument_map_in_pandas(merge_stream, metrics)
-    shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
-    return shuffled.mapInPandas(merge_stream, schema=out_schema)
+    return two_phase_merge(
+        partials, keys, _merge_blob_runs(config), metrics=metrics
+    )
 
 
 def ddsketch_agg(
@@ -558,87 +551,52 @@ def _ddsketch_agg_from_bins(
             F.max("v").alias("mx"),
         )
     )
-    kcols = list(keys)
-    key_fields = [ext.schema[k] for k in kcols]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType())])
+    return two_phase_merge(
+        ext, keys, _assemble_runs(config), order_by=("sign", "bucket"), metrics=metrics
+    )
 
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # streaming over key runs (bins arrive repartitioned by key, sorted
-        # by (keys, sign, bucket)); buffers one group's bin arrays at a time
-        cur_key: tuple | None = None
-        sgns: list[np.ndarray] = []
-        bkts: list[np.ndarray] = []
-        cnts: list[np.ndarray] = []
-        stats = [0.0, 0.0, math.inf, -math.inf]  # cnt, sum, min, max
-        out_rows: list[tuple] = []
 
-        def finish() -> None:
-            sgn = np.concatenate(sgns)
-            bkt = np.concatenate(bkts)
-            cnt = np.concatenate(cnts)
-            s = DDSketch(config=config)
-            p = sgn == 1
-            n = sgn == -1
-            s.pos_idx, s.pos_cnt = bkt[p], cnt[p]
-            s.neg_idx, s.neg_cnt = bkt[n], cnt[n]
-            s.zero_count = float(cnt[sgn == 0].sum())
-            s._apply_collapse()
-            s.exact_count = stats[0]
-            s.exact_sum = stats[1]
-            s.exact_min = stats[2]
-            s.exact_max = stats[3]
-            out_rows.append((*cur_key, encode_sketch(s)))
+def _segment_sums(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """``values[a:b].sum()`` of each segment, bit for bit: numpy sums fewer
+    than 8 values left to right from 0.0, as bincount does, and longer
+    ones pairwise."""
+    lens = np.diff(np.append(starts, values.size))
+    out = np.bincount(
+        np.repeat(np.arange(starts.size), lens), weights=values, minlength=starts.size
+    )
+    for i in np.flatnonzero(lens >= 8):
+        out[i] = values[starts[i] : starts[i] + lens[i]].sum()
+    return out
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            sgn_a = pdf["sign"].to_numpy()
-            bkt_a = pdf["bucket"].to_numpy(dtype=np.int64)
-            cnt_a = pdf["count"].to_numpy(dtype=np.float64)
-            vw_a = pdf["vw"].to_numpy(dtype=np.float64)
-            mn_a = pdf["mn"].to_numpy(dtype=np.float64)
-            mx_a = pdf["mx"].to_numpy(dtype=np.float64)
-            # find run boundaries within the batch
-            start = 0
-            for i in range(len(pdf) + 1):
-                k = (
-                    _norm_key(a[i] for a in key_arrays)
-                    if i < len(pdf)
-                    else None
-                )
-                if i < len(pdf) and k == cur_key:
-                    continue
-                if i > start:
-                    sl = slice(start, i)
-                    sgns.append(sgn_a[sl])
-                    bkts.append(bkt_a[sl])
-                    cnts.append(cnt_a[sl])
-                    stats[0] += float(cnt_a[sl].sum())
-                    stats[1] += float(vw_a[sl].sum())
-                    stats[2] = min(stats[2], float(mn_a[sl].min()))
-                    stats[3] = max(stats[3], float(mx_a[sl].max()))
-                if i < len(pdf):
-                    if cur_key is not None and k != cur_key and sgns:
-                        finish()
-                        sgns, bkts, cnts = [], [], []
-                        stats = [0.0, 0.0, math.inf, -math.inf]
-                    cur_key = k
-                    start = i
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
-                out_rows = []
-        if cur_key is not None and sgns:
-            finish()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + ["sketch"])
 
-    if metrics is not None:
-        from sketches_go_spark.plans.metrics import instrument_map_in_pandas
+def _assemble_runs(config: DDSketchConfig):
+    """:func:`two_phase_merge` kernel that turns each key run of the
+    extended bins relation into one sketch; a run's exact stats add up the
+    per-batch sums, min and max of its rows."""
 
-        assemble = instrument_map_in_pandas(assemble, metrics)
-    shuffled = ext.repartition(*kcols).sortWithinPartitions(*kcols, "sign", "bucket")
-    return shuffled.mapInPandas(assemble, schema=out_schema)
+    def merge_runs(pdf: pd.DataFrame, starts: np.ndarray, carry):
+        bins = [pdf[c].to_numpy(dtype=np.int64) for c in ("sign", "bucket")]
+        bins.append(pdf["count"].to_numpy(dtype=np.float64))
+        n = starts.size
+        # what the run already holds: nothing, or the carried part of it
+        xcount, xsum = np.zeros(n), np.zeros(n)
+        xmin, xmax = np.full(n, math.inf), np.full(n, -math.inf)
+        if carry is not None:
+            xcount[0], xsum[0], xmin[0], xmax[0] = carry[1]
+        xcount += _segment_sums(bins[2], starts)
+        xsum += _segment_sums(pdf["vw"].to_numpy(dtype=np.float64), starts)
+        mn = np.minimum.reduceat(pdf["mn"].to_numpy(dtype=np.float64), starts)
+        mx = np.maximum.reduceat(pdf["mx"].to_numpy(dtype=np.float64), starts)
+        xmin = np.where(mn < xmin, mn, xmin)
+        xmax = np.where(mx > xmax, mx, xmax)
+        if carry is not None:
+            bins = [np.concatenate([c, b]) for c, b in zip(carry[0], bins)]
+            starts = np.concatenate([[0], starts[1:] + carry[0][0].size])
+        blobs = _sketches_from_bins(*bins, starts, config, xcount, xsum, xmin, xmax)
+        last = slice(starts[-1], None)
+        return blobs, ([b[last] for b in bins], (xcount[-1], xsum[-1], xmin[-1], xmax[-1]))
+
+    return merge_runs
 
 
 def _decode(blob) -> DDSketch:

@@ -6,9 +6,9 @@ t-digest) — same two-path design as DDSketch:
   exactly reproducible in DuckDB (the oracle replays the identical hash);
 - **UDAF paths** produce the sketch as an encoded BinaryType value via the
   explicit two-phase mapInPandas-partial → shuffle-of-tiny-blobs → streaming
-  mapInPandas merge topology (shared template ``two_phase_agg`` — the same
-  repartition+sortWithinPartitions+streaming-merge shape as
-  ``ddsketch_fns.ddsketch_merge``), for rollups / storage / streaming state.
+  mapInPandas merge topology (shared template ``two_phase_agg``; its merge
+  stage :func:`two_phase_merge` is also the DDSketch merge, which passes a
+  columnar batch kernel), for rollups / storage / streaming state.
 """
 
 from __future__ import annotations
@@ -76,8 +76,8 @@ def two_phase_agg(
     partition) built batch-wise in mapInPandas (map-side combine), shuffle of
     the tiny encoded partials keyed on the group, then a STREAMING merge —
     repartition + sortWithinPartitions + a single mapInPandas pass that walks
-    the sorted partials and emits one sketch per key run.  Same topology as
-    ``ddsketch_fns.ddsketch_merge``: per-group invocation cost is one Python
+    the sorted partials and emits one sketch per key run
+    (:func:`two_phase_merge`): per-group invocation cost is one Python
     decode per partial row, not the ~1 ms applyInPandas per-group call that
     dominates at 10^5+ keys.
 
@@ -131,55 +131,101 @@ def two_phase_agg(
         src = src.repartition(*kcols)
     partials = src.mapInPandas(build, schema=out_schema)
     return two_phase_merge(
-        partials, keys, decode, out_col, co_located=(strategy == "repartition")
+        partials, keys, merge_rows(decode, out_col), out_col,
+        co_located=(strategy == "repartition"),
     )
+
+
+def key_runs(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
+    """Row offsets where each run of equal ``keys`` starts in a batch sorted
+    by them; nulls (None or NaN) compare equal."""
+    new = np.zeros(len(pdf), dtype=bool)
+    new[:1] = True
+    for k in keys:
+        codes = pd.factorize(pdf[k], use_na_sentinel=False)[0]
+        new[1:] |= codes[1:] != codes[:-1]
+    return np.flatnonzero(new)
+
+
+def merge_rows(decode: Callable[[bytes], object], col: str = "sketch"):
+    """``merge_runs`` kernel for :func:`two_phase_merge` that decodes and
+    merges one blob at a time; sketch objects expose ``.merge()`` and
+    ``.to_bytes()``."""
+
+    def merge_runs(pdf: pd.DataFrame, starts: np.ndarray, carry):
+        blobs = pdf[col].to_numpy()
+        ends = np.append(starts[1:], blobs.size)
+        out = []
+        cur = carry
+        for i, (a, b) in enumerate(zip(starts, ends)):
+            if i:
+                cur = None
+            for blob in blobs[a:b]:
+                s = decode(bytes(blob))
+                if cur is None:
+                    cur = s
+                else:
+                    cur.merge(s)
+            out.append(cur.to_bytes())
+        return out, cur
+
+    return merge_runs
 
 
 def two_phase_merge(
     partials: DataFrame,
     keys: Sequence[str],
-    decode: Callable[[bytes], object],
+    merge_runs,
     out_col: str = "sketch",
     co_located: bool = False,
+    order_by: Sequence[str] = (),
+    metrics=None,
 ) -> DataFrame:
-    """Shared merge stage: shuffle the tiny encoded partials by group key
-    (skipped when ``co_located`` — the build stage already repartitioned the
-    raw rows), sort within partitions, and walk the sorted runs in one
-    streaming mapInPandas pass."""
+    """Shared merge stage: shuffle the rows by group key (skipped when
+    ``co_located`` -- the build stage already repartitioned the raw rows),
+    sort within partitions by the keys then ``order_by``, and walk the key
+    runs in one streaming mapInPandas pass -- not applyInPandas, whose ~1 ms
+    per-group invocation dominates at 10^5+ keys.
+
+    ``merge_runs(pdf, starts, carry)`` merges each run of rows
+    ``[starts[i], starts[i+1])`` of one Arrow batch into one blob and returns
+    (one blob per run, the merged state of the last run).  ``carry`` is the
+    state of the previous batch's last run when the batch's first run
+    continues that key, else None: a key spanning batches still yields one
+    row while memory stays at one batch plus one run's state.
+    :func:`merge_rows` builds the kernel for per-row decode/merge sketches.
+    ``metrics`` records per-task rows and wall time (plans.metrics)."""
     kcols = list(keys)
     key_fields = [partials.schema[k] for k in kcols]
     out_schema = StructType(list(key_fields) + [StructField(out_col, BinaryType())])
 
     def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key: tuple | None = None
-        cur = None
-        out_rows: list[tuple] = []
+        pending = None  # (key, one-row frame, state) of the last run so far
         for pdf in batches:
             if pdf.empty:
                 continue
-            key_arrays = [pdf[k].to_numpy() for k in kcols]
-            for i, blob in enumerate(pdf[out_col]):
-                k = _norm_key(a[i] for a in key_arrays)
-                if k != cur_key:
-                    if cur is not None:
-                        out_rows.append((*cur_key, cur.to_bytes()))
-                    cur_key = k
-                    cur = decode(bytes(blob))
-                else:
-                    cur.merge(decode(bytes(blob)))
-            if len(out_rows) >= 10000:
-                yield pd.DataFrame(out_rows, columns=kcols + [out_col])
-                out_rows = []
-        if cur is not None:
-            out_rows.append((*cur_key, cur.to_bytes()))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=kcols + [out_col])
+            starts = key_runs(pdf, kcols)
+            out = pdf[kcols].iloc[starts].reset_index(drop=True)
+            first = _norm_key(out.iloc[0].tolist())
+            carry = pending[2] if pending is not None and pending[0] == first else None
+            blobs, state = merge_runs(pdf, starts, carry)
+            out[out_col] = pd.Series(list(blobs), dtype=object)
+            done = [out.iloc[:-1]]
+            if pending is not None and carry is None:
+                done.insert(0, pending[1])
+            done = pd.concat(done, ignore_index=True) if len(done) > 1 else done[0]
+            if len(done):
+                yield done
+            pending = (_norm_key(out.iloc[-1][kcols].tolist()), out.iloc[-1:], state)
+        if pending is not None:
+            yield pending[1]
 
-    if co_located:
-        # groups are already co-located; only an in-partition sort is needed
-        shuffled = partials.sortWithinPartitions(*kcols)
-    else:
-        shuffled = partials.repartition(*kcols).sortWithinPartitions(*kcols)
+    if metrics is not None:
+        from sketches_go_spark.plans.metrics import instrument_map_in_pandas
+
+        merge_stream = instrument_map_in_pandas(merge_stream, metrics)
+    shuffled = partials if co_located else partials.repartition(*kcols)
+    shuffled = shuffled.sortWithinPartitions(*kcols, *order_by)
     return shuffled.mapInPandas(merge_stream, schema=out_schema)
 
 
@@ -359,7 +405,7 @@ def hll_agg(
 
     partials = hashed.mapInPandas(build, schema=out_schema)
     return two_phase_merge(
-        partials, keys, HyperLogLog.from_bytes,
+        partials, keys, merge_rows(HyperLogLog.from_bytes),
         co_located=(strategy == "repartition"),
     )
 
@@ -693,7 +739,7 @@ def cms_agg(
 
     partials = hashed.mapInPandas(build, schema=out_schema)
     return two_phase_merge(
-        partials, keys, CountMinSketch.from_bytes,
+        partials, keys, merge_rows(CountMinSketch.from_bytes),
         co_located=(strategy == "repartition"),
     )
 
@@ -815,7 +861,7 @@ def bloom_agg(
 
     partials = hashed.mapInPandas(build, schema=out_schema)
     return two_phase_merge(
-        partials, keys, BloomFilter.from_bytes,
+        partials, keys, merge_rows(BloomFilter.from_bytes),
         co_located=(strategy == "repartition"),
     )
 

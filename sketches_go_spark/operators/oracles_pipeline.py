@@ -609,8 +609,10 @@ def closure_over_pairs_sql(
 ) -> str:
     """Wrap ANY (id_a, id_b) pair-producing SQL into transitive-closure
     component labeling over the full ``src`` table (min reachable id; same
-    lossless ``lbl < v`` prune as components_oracle)."""
-    return f"""WITH RECURSIVE sgs_prs AS ({pairs_sql}),
+    lossless ``lbl < v`` prune as components_oracle).  The pair CTE is
+    MATERIALIZED so the recursion reads it once instead of re-running the
+    pair query on every step."""
+    return f"""WITH RECURSIVE sgs_prs AS MATERIALIZED ({pairs_sql}),
 sgs_edges AS (
   SELECT id_a AS u, id_b AS v FROM sgs_prs
   UNION SELECT id_b AS u, id_a AS v FROM sgs_prs

@@ -6,6 +6,8 @@ wire compatibility with sketches-go's custom format.  Round-trip / error-path
 methodology per ddsketch_test.go:486-535,869-894.
 """
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -165,19 +167,30 @@ def test_empty_sketch_roundtrip():
     assert s2.is_empty
 
 
-def test_decode_errors():
+def _decode_one(blob, mapping=None):
+    return enc.decode_sketch(blob, mapping=mapping)
+
+
+def _decode_batch(blob, mapping=None):
+    # the bad blob sits between two good ones
+    good = enc.encode_sketch(DDSketch.from_values([3.0, 4.0]))
+    return enc.decode_sketches([good, blob, good], mapping=mapping)
+
+
+@pytest.mark.parametrize("decode", [_decode_one, _decode_batch], ids=["scalar", "batch"])
+def test_decode_errors(decode):
     s = DDSketch.from_values([1.0, 2.0])
     with pytest.raises(enc.DecodingError):
-        enc.decode_sketch(enc.encode_sketch(s, omit_index_mapping=True))  # missing mapping
+        decode(enc.encode_sketch(s, omit_index_mapping=True))  # missing mapping
     with pytest.raises(enc.DecodingError):
-        enc.decode_sketch(b"\xfb")  # unknown feature flag
+        decode(b"\xfb")  # unknown feature flag
     # mapping mismatch
     other = DDSketchConfig(alpha=0.1).mapping()
     with pytest.raises(enc.DecodingError):
-        enc.decode_sketch(enc.encode_sketch(s), mapping=other)
+        decode(enc.encode_sketch(s), mapping=other)
     # truncated payload
     with pytest.raises(enc.DecodingError):
-        enc.decode_sketch(enc.encode_sketch(s)[:-1])
+        decode(enc.encode_sketch(s)[:-1])
 
 
 def test_dense_vs_sparse_choice():
@@ -274,3 +287,177 @@ def test_golden_blob_decode_is_merge():
     assert np.array_equal(s.pos_idx, [3])
     assert np.allclose(s.pos_cnt, [4.0])  # 2.0 + two unit occurrences
     assert s.zero_count == pytest.approx(3.0)
+
+
+# ------------------------------------------------------------ batch kernels
+def _codec_cases() -> list[DDSketch]:
+    """Seeded sketches covering the three bin framings, the zero bucket, the
+    negative store, weighted non-integral counts (9-byte varfloats), the
+    empty sketch, a collapsing config and interpolated mappings."""
+    rng = np.random.default_rng(20)
+    collapsing = DDSketchConfig(alpha=0.05, max_bins=16, collapse="lowest")
+    cases = [
+        DDSketch(),
+        DDSketch.from_values(np.arange(1, 3000, dtype=np.float64)),  # dense
+        DDSketch.from_values(np.logspace(-30, 30, 40)),  # index deltas
+        DDSketch.from_values(np.repeat(np.logspace(-5, 5, 30), 3)),  # repeats
+        DDSketch.from_values(rng.lognormal(0, 4, 200), rng.integers(5, 9, 200)),  # sparse
+        DDSketch.from_values(rng.normal(0, 3, 500), rng.random(500) * 2),  # 9-byte counts
+        DDSketch.from_values(np.concatenate([-rng.exponential(2, 300), [0.0] * 4])),
+        DDSketch.from_values([0.0, 0.0]),
+        DDSketch.from_values([-1e300, 1e300, 1e-300]),
+        DDSketch.from_values(rng.lognormal(0, 3, 400), config=collapsing),
+        DDSketch.from_values(rng.normal(0, 9, 400), config=collapsing),
+        DDSketch.from_values(
+            rng.lognormal(0, 2, 300), config=DDSketchConfig(interpolation="cubic")
+        ),
+        DDSketch.from_values(
+            rng.normal(5, 2, 300), config=DDSketchConfig(alpha=0.02, interpolation="linear")
+        ),
+    ]
+    # a Kahan compensation that reaches the encoded sum
+    merged = DDSketch.from_values([1e16])
+    merged.merge(DDSketch.from_values([1.0, 1.0]))
+    return cases + [merged]
+
+
+def _columns(sketches: list[DDSketch]) -> enc.SketchColumns:
+    parts = []
+    for s in sketches:
+        m = s.mapping
+        parts.append(enc.SketchColumns(
+            np.array([0, s.pos_idx.size, s.pos_idx.size + s.neg_idx.size]),
+            np.concatenate([s.pos_idx, s.neg_idx]).astype(np.int64),
+            np.concatenate([s.pos_cnt, s.neg_cnt]),
+            *(np.array([x]) for x in (
+                s.zero_count, s.exact_count, s.exact_sum, s._sum_compensation,
+                s.exact_min, s.exact_max,
+            )),
+            np.array([enc._MAPPING_SUBFLAGS[m.interpolation]], dtype=np.uint8),
+            np.array([m.gamma]),
+            np.array([m.index_offset]),
+        ))
+    return enc.concat_sketch_columns(parts)
+
+
+def _framing(blob: bytes) -> set[int]:
+    """Bin encodings used by a blob's store blocks."""
+    seen = set()
+    b = memoryview(blob)
+    pos = 0
+    while pos < len(b):
+        flag = b[pos]
+        if flag & 0b11 in (enc.FLAG_TYPE_POSITIVE_STORE, enc.FLAG_TYPE_NEGATIVE_STORE):
+            seen.add(flag >> 2)
+            pos = enc._decode_store_into({}, b, pos + 1, flag >> 2)
+        elif flag & 0b11 == enc.FLAG_TYPE_INDEX_MAPPING:
+            pos += 17
+        elif flag in (enc.FLAG_ZERO_COUNT, enc.FLAG_COUNT):
+            pos = enc.decode_varfloat64(b, pos + 1)[1]
+        else:
+            pos += 9
+    return seen
+
+
+def test_encode_sketches_byte_identical():
+    cases = _codec_cases()
+    want = [enc.encode_sketch(s) for s in cases]
+    assert list(enc.encode_sketches(_columns(cases))) == want
+    framings = set().union(*map(_framing, want))
+    assert framings == {
+        enc.BIN_ENCODING_INDEX_DELTAS_AND_COUNTS,
+        enc.BIN_ENCODING_INDEX_DELTAS,
+        enc.BIN_ENCODING_CONTIGUOUS_COUNTS,
+    }
+    assert any(
+        enc.varfloat64_size(float(c)) == 9 for s in cases for c in s.pos_cnt
+    )
+
+
+def test_decode_sketches_matches_decode_sketch():
+    cases = _codec_cases()
+    blobs = [enc.encode_sketch(s) for s in cases]
+    # a blob without exact stats and one with two blocks per store
+    blobs.append(enc.encode_sketch(cases[4], include_exact_stats=False))
+    blobs.append(
+        b"\x02" + struct.pack("<dd", 2.0, 0.0)
+        + b"\x05\x01\x06\x03" + b"\x09\x02\x06\x00" + b"\x04\x03"
+    )
+    cols = enc.decode_sketches(blobs)
+    assert cols.n == len(blobs)
+    for i, blob in enumerate(blobs):
+        s = enc.decode_sketch(blob)
+        pos, neg, end = cols.bounds[2 * i : 2 * i + 3]
+        assert np.array_equal(cols.index[pos:neg], s.pos_idx)
+        assert np.array_equal(cols.count[pos:neg], s.pos_cnt)
+        assert np.array_equal(cols.index[neg:end], s.neg_idx)
+        assert np.array_equal(cols.count[neg:end], s.neg_cnt)
+        got = (cols.zero_count[i], cols.xcount[i], cols.xsum[i], cols.xmin[i], cols.xmax[i])
+        assert got == (s.zero_count, s.exact_count, s.exact_sum, s.exact_min, s.exact_max)
+        assert (cols.gamma[i], cols.index_offset[i]) == (s.mapping.gamma, s.mapping.index_offset)
+    # decode then encode is the identity on our own blobs
+    assert list(enc.encode_sketches(cols))[: len(cases)] == blobs[: len(cases)]
+
+
+def test_decode_sketches_agrees_on_damaged_blobs():
+    """Every truncation and random single-byte corruption of real blobs
+    either fails in both decoders or decodes to the same bins and stats."""
+    rng = np.random.default_rng(22)
+    good = enc.encode_sketch(DDSketch.from_values([2.0]))
+    damaged = []
+    for s in _codec_cases()[1:7]:
+        blob = enc.encode_sketch(s)
+        damaged += [blob[:i] for i in range(0, len(blob), 3)]
+        for _ in range(60):
+            b = bytearray(blob)
+            b[rng.integers(len(b))] = rng.integers(256)
+            damaged.append(bytes(b))
+    for blob in damaged:
+        try:
+            want = enc.decode_sketch(blob)
+        except (enc.DecodingError, ValueError):
+            with pytest.raises((enc.DecodingError, ValueError)):
+                enc.decode_sketches([good, blob, good])
+            continue
+        cols = enc.decode_sketches([good, blob, good])
+        pos, neg, end = cols.bounds[2:5]
+        assert np.array_equal(cols.index[pos:neg], want.pos_idx)
+        assert np.array_equal(cols.count[pos:neg], want.pos_cnt, equal_nan=True)
+        assert np.array_equal(cols.index[neg:end], want.neg_idx)
+        assert np.array_equal(cols.count[neg:end], want.neg_cnt, equal_nan=True)
+        got = [cols.zero_count[1], cols.xcount[1], cols.xsum[1], cols.xmin[1], cols.xmax[1]]
+        assert np.array_equal(
+            got, [want.zero_count, want.exact_count, want.exact_sum, want.exact_min, want.exact_max],
+            equal_nan=True,
+        )
+
+
+def test_merge_sketch_runs_matches_merge_fold():
+    """Runs merged columnar equal a left-to-right DDSketch.merge fold, bits
+    and all (non-integral weights, a carried compensation, collapsing)."""
+    rng = np.random.default_rng(21)
+    for cfg in (DDSketchConfig(), DDSketchConfig(alpha=0.05, max_bins=40, collapse="highest")):
+        parts = [
+            DDSketch.from_values(rng.normal(0, 10 ** (i % 4), 50), rng.random(50) * 3, config=cfg)
+            for i in range(12)
+        ]
+        blobs = [enc.encode_sketch(p) for p in parts]
+        starts = np.array([0, 1, 5, 11])
+        merged = enc.encode_sketches(
+            enc.merge_sketch_runs(enc.decode_sketches(blobs, config=cfg), starts, cfg)
+        )
+        for g, (a, b) in enumerate(zip(starts, list(starts[1:]) + [len(blobs)])):
+            acc = enc.decode_sketch(blobs[a], config=cfg)
+            for blob in blobs[a + 1 : b]:
+                acc.merge(enc.decode_sketch(blob, config=cfg))
+            if cfg.collapse == "none":
+                assert merged[g] == enc.encode_sketch(acc)
+            else:
+                # one collapse per merged store: same count, at most max_bins
+                m = enc.decode_sketch(merged[g])
+                assert m.count == pytest.approx(acc.count)
+                assert m.pos_idx.size <= cfg.max_bins and m.neg_idx.size <= cfg.max_bins
+    mixed = [enc.encode_sketch(DDSketch.from_values([1.0], config=DDSketchConfig(alpha=a)))
+             for a in (0.01, 0.02)]
+    with pytest.raises(ValueError):
+        enc.merge_sketch_runs(enc.decode_sketches(mixed), np.array([0]))

@@ -263,6 +263,40 @@ def test_bins_strategy_group_spans_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def test_merge_key_run_spans_arrow_batches(spark):
+    """ddsketch_merge carries a key run across Arrow batches: > 97 partials
+    of one key (and a null key) at 97 rows per batch still give ONE row per
+    key, byte-equal to a local decode/merge/encode fold.  Integer
+    values keep every sum exact, so the fold order cannot change a bit."""
+    from sketches_go_spark.core.encoding import decode_sketch, encode_sketch
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
+    try:
+        sdf = spark.range(6000).select(
+            F.when(F.col("id") % 7 == 0, F.lit(None))
+            .otherwise((F.col("id") % 3).cast("string"))
+            .alias("g"),
+            ((F.col("id") * 37) % 2001 - 1000).cast("double").alias("v"),
+        )
+        partials = dd.ddsketch_partial(sdf.repartition(250), "v", ["g"], CFG).collect()
+        counts = pd.Series([r["g"] for r in partials]).value_counts(dropna=False)
+        assert counts.max() > 97 and counts.index.isna().any()
+        rows = dd.ddsketch_merge(
+            spark.createDataFrame(partials, "g string, sketch binary"), ["g"], CFG
+        ).collect()
+        assert sorted(map(str, (r["g"] for r in rows))) == ["0", "1", "2", "None"]
+        for r in rows:
+            acc = None
+            for p in partials:
+                if p["g"] == r["g"]:
+                    s = decode_sketch(bytes(p["sketch"]), config=CFG)
+                    acc = s if acc is None else acc.merge(s)
+            assert bytes(r["sketch"]) == encode_sketch(acc)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 def test_bins_psi_identity_and_shift(spark):
     from pyspark.sql import functions as F
 
